@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jubilant_garbanzo_spark.operators.dedup import _dir_fingerprint
 from jubilant_garbanzo_spark.session import configure_runtime
 
 #: All driver-provided tables (TESTDATA.md).
@@ -43,9 +44,31 @@ BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Memo: parquet-footer split counts per file path — one driver-side
-#: metadata read per table per fixture dir, not per query.
-_SCAN_SLICES_MEMO: dict[str, int] = {}
+#: Parquet-footer memo, one entry per table path: ``fp`` is the
+#: content fingerprint the entry was read under, ``schema`` the schema
+#: Spark inferred, ``slices`` the scan-slice count. An entry whose
+#: fingerprint no longer matches the file is dropped, so a table
+#: rewritten in place is read afresh.
+_FOOTER_MEMO: dict[str, dict] = {}
+
+
+def _footer(path: str) -> dict:
+    """The memo entry for ``path``, reset when its content changed:
+    (size, mtime_ns) for a file, ``dedup._dir_fingerprint`` for a
+    directory. A path that does not exist gets a throwaway entry."""
+    try:
+        if os.path.isdir(path):
+            fp = _dir_fingerprint((path,))
+        else:
+            st = os.stat(path)
+            fp = (st.st_size, st.st_mtime_ns)
+    except OSError:
+        _FOOTER_MEMO.pop(path, None)
+        return {}
+    entry = _FOOTER_MEMO.get(path)
+    if entry is None or entry["fp"] != fp:
+        entry = _FOOTER_MEMO[path] = {"fp": fp}
+    return entry
 
 
 def _scan_slices(path: str) -> int:
@@ -97,9 +120,10 @@ def fan_out_scan(
         return df
     parallelism = spark.sparkContext.defaultParallelism
     path = f"{sf_dir}/{name}.parquet"
-    if path not in _SCAN_SLICES_MEMO:
-        _SCAN_SLICES_MEMO[path] = _scan_slices(path)
-    if _SCAN_SLICES_MEMO[path] >= parallelism:
+    entry = _footer(path)
+    if "slices" not in entry:
+        entry["slices"] = _scan_slices(path)
+    if entry["slices"] >= parallelism:
         return df
     return df.repartition(parallelism)
 
@@ -113,10 +137,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``timestamp_micros`` rebuilds a timestamp. Cast to TIMESTAMP_NTZ so
     all engine timestamps are naive-UTC like the other tables
     (``o_orderdate``/``l_shipdate`` already read as TIMESTAMP_NTZ).
+
+    The parquet schema comes from :data:`_FOOTER_MEMO`: only the first
+    load of a file (per content fingerprint) in the process pays
+    Spark's schema-inference job; later loads pass the memoized schema
+    to ``.schema(...)`` and launch no job.
     """
     configure_runtime(spark)
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    entry = _footer(path)
+    if "schema" in entry:
+        df = spark.read.schema(entry["schema"]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if entry:
+            entry["schema"] = df.schema
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts",

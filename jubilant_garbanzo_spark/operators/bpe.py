@@ -37,8 +37,7 @@ tests/test_llm_ops.py.
 
 from __future__ import annotations
 
-import os
-
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -323,28 +322,42 @@ def oracle_replay_ctes(rounds: int = N_ROUNDS) -> str:
 #: pair-count aggregation + one argmax + one merge map-pass).
 N_TRAIN_MERGES = 8
 
+#: Columns and schema of the learned-merge table :func:`train_merges`
+#: returns.
+TRAIN_COLUMNS = ("merge_rank", "a", "b", "merged", "weighted_count")
+TRAIN_SCHEMA = (
+    "merge_rank int, a string, b string, merged string, weighted_count bigint"
+)
+
 
 def train_merges(words: DataFrame, rounds: int = N_TRAIN_MERGES) -> DataFrame:
     """Learn the top-``rounds`` BPE merges from a (word, cnt) dict —
-    the Sennrich ACL'16 get_stats/merge loop, fully distributed.
+    the Sennrich ACL'16 get_stats/merge loop, distributed over the
+    distinct-word dict with a driver-side argmax.
 
     Per round: (1) weighted adjacent-pair counts via explode +
-    groupBy(a, b) with map-side partial agg; (2) the argmax pair as a
-    ONE-ROW DataFrame (count desc, then (a, b) lexicographic — a total
-    tie order, so training is deterministic); (3) that row broadcast-
-    crossJoined onto every word and merged with the same greedy
-    left-to-right fold the apply path uses. No driver data path at
-    all — the learned state lives in 1-row frames, not collects.
+    groupBy(a, b) with map-side partial agg; (2) the argmax pair
+    (count desc, then (a, b) lexicographic — a total tie order, so
+    training is deterministic) collected to the driver as ONE row via
+    ``orderBy(...).limit(1)``; (3) that pair applied as literals in the
+    greedy left-to-right fold the apply path uses. A round costs two
+    jobs — the pair-count shuffle-map job and the argmax job — and a
+    round with no adjacent pair left ends training early.
 
-    Each round is eager-localCheckpointed: round r+1's words depend on
-    round r's argmax, and Catalyst does not CSE sibling subplans, so a
-    lazy chain would re-execute every earlier round once per consumer
-    (the same measured pathology duplicate_clusters fixed in r5).
+    Only the dict is checkpointed (once, eagerly). Later rounds stack
+    their folds on it unmaterialized: re-running earlier folds is
+    narrow, map-only work over the dict, which costs less than a
+    blocking checkpoint job per round.
+
+    The learned rows (at most ``rounds``, in ``merge_rank`` order)
+    come back as a driver-built local relation (pandas through Arrow),
+    so reading them launches no job.
 
     Scale shape at 100 TB: training runs on the DISTINCT-word dict
     (millions of rows, not trillions of tokens) — the pair-count agg
     is the only shuffle per round and it carries one row per distinct
-    (a, b), i.e. vocabulary-sized, not corpus-sized.
+    (a, b), i.e. vocabulary-sized, not corpus-sized; the driver only
+    ever receives one row per round.
     """
     toks = words.select(
         F.expr("filter(split(word, ''), c -> c <> '')").alias("t"),
@@ -356,7 +369,7 @@ def train_merges(words: DataFrame, rounds: int = N_TRAIN_MERGES) -> DataFrame:
         "   concat(slice(acc, 1, size(acc) - 1), array(concat(pa, pb))),"
         "   concat(acc, array(x))))"
     )
-    bests = []
+    learned = []
     for r in range(rounds):
         pairs = toks.select(
             "cnt",
@@ -373,39 +386,19 @@ def train_merges(words: DataFrame, rounds: int = N_TRAIN_MERGES) -> DataFrame:
             .agg(F.sum("cnt").alias("weighted_count"))
             .orderBy(F.desc("weighted_count"), F.asc("pa"), F.asc("pb"))
             .limit(1)
-            .select(
-                F.lit(r).alias("merge_rank"),
-                F.col("pa").alias("a"),
-                F.col("pb").alias("b"),
-                F.concat("pa", "pb").alias("merged"),
-                F.col("weighted_count").cast("bigint").alias("weighted_count"),
-            )
-            # LAZY checkpoint (round 15, guide §1.2 job shape): the
-            # round's ONE blocking job is the toks fold below — its
-            # broadcast build computes this argmax row and the lazy
-            # checkpoint materializes it along the way, so the final
-            # union still reads a truncated 1-row plan but the loop no
-            # longer pays a separate blocking argmax job per round
-            # (16 -> 8 blocking checkpoints per training run).
-            .localCheckpoint(
-                eager=os.environ.get("SPARK_GRAFT_BPE_LAZY_BEST", "1") == "0"
-            )
+            .collect()
         )
-        bests.append(best)
+        if not best:
+            break
+        a, b, wc = best[0]
+        learned.append((r, a, b, a + b, wc))
         if r < rounds - 1:
-            toks = (
-                toks.crossJoin(
-                    F.broadcast(
-                        best.select(F.col("a").alias("pa"), F.col("b").alias("pb"))
-                    )
-                )
-                .select(F.expr(fold).alias("t"), "cnt")
-                .localCheckpoint(eager=True)
-            )
-    out = bests[0]
-    for b in bests[1:]:
-        out = out.unionByName(b)
-    return out.orderBy("merge_rank")
+            toks = toks.select(
+                "t", "cnt", F.lit(a).alias("pa"), F.lit(b).alias("pb")
+            ).select(F.expr(fold).alias("t"), "cnt")
+    return words.sparkSession.createDataFrame(
+        pd.DataFrame(learned, columns=TRAIN_COLUMNS), TRAIN_SCHEMA
+    )
 
 
 def oracle_train_sql(rounds: int = N_TRAIN_MERGES) -> str:

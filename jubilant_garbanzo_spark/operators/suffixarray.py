@@ -43,9 +43,9 @@ Distribution discipline (the part that must survive 100 TB):
   i.e. Spark's own RangePartitioner). Every later round buckets by
   ``(r-1)*64 DIV M`` over the PREVIOUS dense rank r — dense ranks are
   uniform on [1, M] by construction, so the ranges are balanced for
-  free. M rides in a broadcast 1-row frame
-  (the argmax-frame pattern of operators/bpe.train_merges — no
-  driver-side data path).
+  free. M rides in a broadcast 1-row frame (the argmax-frame pattern
+  of operators/wordpiece.train_wordpiece_merges — no driver-side data
+  path).
 - Each round ends in an eager ``localCheckpoint``: the next round
   self-joins the output, and without truncation the lineage (and
   Catalyst analysis time) doubles per round — the duplicate_clusters

@@ -37,8 +37,6 @@ loop with HuggingFace semantics pins both in tests/test_llm_ops.py.
 
 from __future__ import annotations
 
-import os
-
 from jubilant_garbanzo_spark.operators.bpe import _let
 
 #: Word-START pieces. Singles a-z give near-totality on the fixture's
@@ -276,8 +274,12 @@ def train_wordpiece_merges(words, rounds: int = N_TRAIN_MERGES):
     ONE-ROW frame (total tie order, so training is deterministic);
     (3) that row broadcast-crossJoined onto every word and merged with
     the same greedy left-to-right fold the BPE trainer uses. No driver
-    data path; each round eager-localCheckpoints (sibling subplans are
-    not CSE'd — the bpe.train_merges lesson).
+    data path; each round eager-localCheckpoints: every round's words
+    carry the argmax frame's plan, and sibling subplans are not CSE'd,
+    so a lazy chain would re-run every earlier round's aggregations.
+    ``bpe.train_merges`` collects its argmax row to the driver and
+    folds it in as a literal instead, so its chain holds only narrow
+    folds and stays lazy.
 
     Scale shape at 100 TB: identical to BPE training — everything runs
     on the DISTINCT-word dict; the only shuffles per round carry one
@@ -365,14 +367,12 @@ def train_wordpiece_merges(words, rounds: int = N_TRAIN_MERGES):
                 F.col("pcount").cast("bigint").alias("pair_count"),
                 F.col("score_nano"),
             )
-            # LAZY checkpoint (round 15, same as bpe.train_merges):
-            # the toks fold's broadcast build materializes this argmax
-            # row inside the round's one blocking job; the final union
-            # reads the truncated 1-row plan without a separate
-            # blocking argmax job per round.
-            .localCheckpoint(
-                eager=os.environ.get("SPARK_GRAFT_BPE_LAZY_BEST", "1") == "0"
-            )
+            # LAZY checkpoint (round 15): the toks fold's broadcast
+            # build materializes this argmax row inside the round's
+            # one blocking job; the final union reads the truncated
+            # 1-row plan without a separate blocking argmax job per
+            # round.
+            .localCheckpoint(eager=False)
         )
         bests.append(best)
         if r < rounds - 1:

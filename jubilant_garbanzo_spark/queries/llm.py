@@ -9,8 +9,6 @@ semantics are pinned by unit tests instead (tests/test_llm_ops.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -4401,13 +4399,12 @@ def text_unigram_train(spark, sf_dir):
         .limit(UG.SEED_MULTI_MAX)
         .select("piece", "ucnt")
     )
-    # LAZY per-round vocab checkpoints (round 15, the bpe.train_merges
-    # lazy-best discipline): the vocab subtree above the previous
-    # checkpoint is bounded (≤ singles + KEEP_MULTI pieces through one
-    # score/union) so the next round's first reader materializes it
-    # inside its own job instead of a separate blocking job per round.
-    lazy = os.environ.get("SPARK_GRAFT_BPE_LAZY_BEST", "1") != "0"
-    vocab = score(singles0.unionByName(multi0)).localCheckpoint(eager=not lazy)
+    # LAZY per-round vocab checkpoints (round 15): the vocab subtree
+    # above the previous checkpoint is bounded (≤ singles + KEEP_MULTI
+    # pieces through one score/union) so the next round's first reader
+    # materializes it inside its own job instead of a separate blocking
+    # job per round.
+    vocab = score(singles0.unionByName(multi0)).localCheckpoint(eager=False)
 
     zero = F.lit(0).cast("bigint")
     for _ in range(UG.EM_ROUNDS):
@@ -4441,9 +4438,7 @@ def text_unigram_train(spark, sf_dir):
             .limit(UG.KEEP_MULTI)
             .select("piece", "ucnt")
         )
-        vocab = score(singles.unionByName(multi)).localCheckpoint(
-            eager=not lazy
-        )
+        vocab = score(singles.unionByName(multi)).localCheckpoint(eager=False)
 
     return vocab.select(
         "piece",
@@ -4535,11 +4530,12 @@ def text_bpe_train(spark, sf_dir):
     """BPE merge-loop TRAINING (Sennrich ACL'16, operators/bpe.py
     train_merges): learn the top-8 merges from the corpus's
     distinct-word dict — each round one vocabulary-sized pair-count
-    shuffle, a 1-row argmax frame (total tie order: count desc, then
-    (a, b)), and a broadcast merge map-pass; rounds are
-    localCheckpointed so the iterative chain executes each round once.
-    No driver data path — the learned table is 1-row DataFrames
-    unioned. The apply half is `text_bpe_tokenize`; together they are
+    shuffle, its 1-row argmax (total tie order: count desc, then
+    (a, b)) collected to the driver, and a merge map-pass with that
+    pair as literals. A round is two Spark jobs; only the dict is
+    checkpointed. The learned table comes back as a driver-local
+    relation, so the query's own collect launches no further job.
+    The apply half is `text_bpe_tokenize`; together they are
     the full tokenizer lifecycle. Oracle replays training positionally
     (unrolled MATERIALIZED CTEs, weighted argmax + gaps-and-islands
     merge); both engines are pinned to the imperative Sennrich loop in
@@ -5389,9 +5385,10 @@ def text_bpe_roundtrip(spark, sf_dir):
     frequencies under the learned vocabulary (top-40, token
     tie-break).
 
-    The only driver transfer is the learned merge table itself —
-    ``N_TRAIN_MERGES`` rows (a production run collects its ~50k-merge
-    vocabulary the same way; the corpus never leaves the executors:
+    The only driver transfers are the learned merge rows — one argmax
+    row per training round, ``N_TRAIN_MERGES`` in all (a production
+    run collects its ~50k-merge vocabulary the same way; the corpus
+    never leaves the executors:
     training aggregates are vocabulary-sized, and apply is the same
     zero-shuffle per-row map stage as `text_bpe_tokenize`). Fixpoint
     (no learned pair left unmerged) is pinned in
@@ -5412,13 +5409,9 @@ def text_bpe_roundtrip(spark, sf_dir):
         .agg(F.count("*").alias("cnt"))
         .localCheckpoint(eager=True)
     )
-    learned = tuple(
-        (r["a"], r["b"])
-        for r in BPE.train_merges(wc)
-        .select("merge_rank", "a", "b")
-        .orderBy("merge_rank")
-        .collect()  # bounded: N_TRAIN_MERGES rows (the learned table)
-    )
+    # Bounded: N_TRAIN_MERGES rows, already in merge_rank order and
+    # driver-local, so this collect launches no job.
+    learned = tuple((r["a"], r["b"]) for r in BPE.train_merges(wc).collect())
     toks = BPE.bpe_tokens(
         wc, "word", "tokens", rounds=len(learned), merges=learned
     )
@@ -5634,7 +5627,7 @@ def embed_pca_power_iteration(spark, sf_dir):
     # frames (grid <= 2144 cells, cells 4096, x 64 — bounded at ANY
     # corpus scale) iterate on one partition, and the per-round x
     # checkpoints are LAZY (truncate lineage without a blocking
-    # per-round job — the bpe lazy-best discipline), so the whole
+    # per-round job — the unigram vocab discipline), so the whole
     # query is 2 blocking jobs + the final action instead of ~10
     # driver barriers.
     e = fan_out_scan(spark, e.select("embedding"), sf_dir, "embeddings")

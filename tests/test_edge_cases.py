@@ -1338,3 +1338,60 @@ def test_partsupp_zero_suppliers_yields_null_not_crash(spark, tmp_path):
     assert all(r["ps_suppkey"] is None for r in rows)
     # supplycost inherits the NULL suppkey term
     assert all(r["ps_supplycost_cents"] is None for r in rows)
+
+
+# ---------------------------------------------------------------------------
+# catalog.load_table's parquet-footer memo
+# ---------------------------------------------------------------------------
+
+
+def test_load_table_reuses_schema_without_a_job(spark, tmp_path, count_jobs):
+    """A second load_table of an unchanged file launches no Spark job:
+    its schema comes from the footer memo, not a second inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jubilant_garbanzo_spark.catalog import load_table
+
+    sf = str(tmp_path)
+    pq.write_table(
+        pa.table({"doc_id": [1, 2], "text": ["a", "b"]}),
+        tmp_path / "documents.parquet",
+    )
+    first, first_jobs = count_jobs(lambda: load_table(spark, sf, "documents"))
+    second, second_jobs = count_jobs(lambda: load_table(spark, sf, "documents"))
+    assert first_jobs >= 1, first_jobs  # the one schema-inference job
+    assert second_jobs == 0, second_jobs
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_footer_memo_sees_a_rewritten_file(spark, tmp_path):
+    """A parquet file rewritten at the same path within one session,
+    with another schema and row-group count, is read afresh:
+    load_table returns the new schema and fan_out_scan sees the new
+    slice count (one row group fans out; one per core does not)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jubilant_garbanzo_spark.catalog import fan_out_scan, load_table
+
+    sf = str(tmp_path)
+    path = tmp_path / "documents.parquet"
+    n = spark.sparkContext.defaultParallelism
+    ids = list(range(n))
+    pq.write_table(pa.table({"doc_id": ids}), path)
+    df = load_table(spark, sf, "documents")
+    assert df.columns == ["doc_id"]
+    assert fan_out_scan(spark, df, sf, "documents") is not df
+
+    pq.write_table(
+        pa.table({"doc_id": ids, "text": [f"t{i}" for i in ids]}),
+        path,
+        row_group_size=1,
+    )
+    assert pq.ParquetFile(path).metadata.num_row_groups == n
+    df = load_table(spark, sf, "documents")
+    assert df.columns == ["doc_id", "text"]
+    assert sorted(r["text"] for r in df.collect()) == sorted(f"t{i}" for i in ids)
+    assert fan_out_scan(spark, df, sf, "documents") is df

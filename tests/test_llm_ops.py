@@ -826,27 +826,14 @@ def test_url_dedup_group_shape(spark, sf_dir):
         ), r["canonical_url"]
 
 
-def test_bpe_training_matches_sennrich_loop(spark, sf_dir):
-    """train_merges must equal the imperative Sennrich get_stats/merge
-    loop on the real corpus — ranks, pairs, merged tokens AND weighted
-    counts (which pins the non-overlap pair-count semantics, not just
-    the argmax order)."""
+def _sennrich_train(vocab, rounds):
+    """The imperative Sennrich get_stats/merge loop over a word → count
+    dict: learned (rank, a, b, merged, weighted count) rows."""
     from collections import Counter
 
-    from jubilant_garbanzo_spark.operators import bpe as BPE
-
-    texts = [
-        r["text"]
-        for r in load_table(spark, sf_dir, "documents").select("text").collect()
-    ]
-    vocab = Counter()
-    for t in texts:
-        for w in t.split(" "):
-            if w:
-                vocab[w] += 1
     words = {w: list(w) for w in vocab}
-    expected = []
-    for r in range(BPE.N_TRAIN_MERGES):
+    learned = []
+    for r in range(rounds):
         stats = Counter()
         for w, toks in words.items():
             for i in range(len(toks) - 1):
@@ -855,7 +842,7 @@ def test_bpe_training_matches_sennrich_loop(spark, sf_dir):
             break
         best = min(stats.items(), key=lambda kv: (-kv[1], kv[0]))[0]
         a, b = best
-        expected.append((r, a, b, a + b, stats[best]))
+        learned.append((r, a, b, a + b, stats[best]))
         for w, toks in words.items():
             out, i = [], 0
             while i < len(toks):
@@ -866,15 +853,75 @@ def test_bpe_training_matches_sennrich_loop(spark, sf_dir):
                     out.append(toks[i])
                     i += 1
             words[w] = out
+    return learned
 
-    wdf = spark.createDataFrame(
+
+def _corpus_vocab(spark, sf_dir):
+    from collections import Counter
+
+    vocab = Counter()
+    for r in load_table(spark, sf_dir, "documents").select("text").collect():
+        for w in r["text"].split(" "):
+            if w:
+                vocab[w] += 1
+    return vocab
+
+
+def _word_dict(spark, vocab):
+    return spark.createDataFrame(
         [(w, c) for w, c in vocab.items()], "word string, cnt long"
     )
-    got = [
-        (r["merge_rank"], r["a"], r["b"], r["merged"], r["weighted_count"])
-        for r in BPE.train_merges(wdf).collect()
-    ]
-    assert got == expected
+
+
+def test_bpe_training_matches_sennrich_loop(spark, sf_dir):
+    """train_merges must equal the imperative Sennrich get_stats/merge
+    loop on the real corpus — ranks, pairs, merged tokens AND weighted
+    counts (which pins the non-overlap pair-count semantics, not just
+    the argmax order). Edge dicts ride along: one whose pairs run out
+    before N_TRAIN_MERGES merges, one of single-character words (no
+    pair at all) and an empty one; each keeps the learned table's
+    schema."""
+    from collections import Counter
+
+    from jubilant_garbanzo_spark.operators import bpe as BPE
+
+    inputs = {
+        "corpus": _corpus_vocab(spark, sf_dir),
+        "pairs_run_out": Counter({"abab": 3, "ab": 2, "ba": 1}),
+        "single_chars": Counter({"a": 3, "b": 1, "c": 2}),
+        "empty": Counter(),
+    }
+    schema = None
+    for name, vocab in inputs.items():
+        expected = _sennrich_train(vocab, BPE.N_TRAIN_MERGES)
+        df = BPE.train_merges(_word_dict(spark, vocab))
+        got = [
+            (r["merge_rank"], r["a"], r["b"], r["merged"], r["weighted_count"])
+            for r in df.collect()
+        ]
+        assert got == expected, name
+        schema = schema or df.schema
+        assert df.schema == schema, (name, df.schema)
+        if name == "pairs_run_out":
+            assert 0 < len(expected) < BPE.N_TRAIN_MERGES
+        if name == "single_chars":
+            assert expected == []
+
+
+def test_bpe_training_job_count(spark, sf_dir, count_jobs):
+    """Job-count pin: on the fixture dict, training launches one job to
+    checkpoint the dict (a parallelized local list, so no shuffle) and
+    exactly two per learned merge — the pair-count shuffle-map job and
+    the argmax collect. The learned table is driver-local, so reading
+    it launches none."""
+    from jubilant_garbanzo_spark.operators import bpe as BPE
+
+    wdf = _word_dict(spark, _corpus_vocab(spark, sf_dir))
+    df, train_jobs = count_jobs(lambda: BPE.train_merges(wdf))
+    rows, read_jobs = count_jobs(df.collect)
+    assert len(rows) == BPE.N_TRAIN_MERGES
+    assert train_jobs == 1 + 2 * len(rows), train_jobs
+    assert read_jobs == 0, read_jobs
 
 
 def test_ivfpq_matches_numpy_reference(spark, sf_dir):

@@ -170,9 +170,6 @@ def test_ivf_probe_plan_reads_cached_index(spark, sf_dir):
     from jubilant_garbanzo_spark.plans.inspect import formatted_plan
 
     e = load_table(spark, sf_dir, "embeddings")
-    pre_ids = {
-        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    }
     assigned, centroids = build_ivf_index(e)
     try:
         # ADVICE r15: the build must have MATERIALIZED both caches
@@ -180,18 +177,22 @@ def test_ivf_probe_plan_reads_cached_index(spark, sf_dir):
         # on Spark's CacheManager substituting the persisted `assigned`
         # subplan inside the centroid aggregate. If a future Spark
         # version broke that substitution, the build job would silently
-        # move into the first probe; this asserts storage for BOTH new
-        # cached RDDs is populated at build time, not merely HIT at
-        # probe time.
-        fresh = [
-            i
-            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            if i.id() not in pre_ids and i.numCachedPartitions() > 0
-        ]
-        assert len(fresh) >= 2, (
-            "build_ivf_index returned before materializing both caches: "
-            + str([str(i) for i in fresh])
-        )
+        # move into the first probe; this asserts that each returned
+        # frame has its OWN cache entry with every partition stored at
+        # build time, not merely HIT at probe time. (Looked up per
+        # frame, so it holds whether or not an earlier test cached the
+        # same plans in this session.)
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        buffers = []
+        for name, frame in (("assigned", assigned), ("centroids", centroids)):
+            entry = cache.lookupCachedData(frame._jdf)
+            assert entry.isDefined(), f"{name} has no cache entry"
+            builder = entry.get().cachedRepresentation().cacheBuilder()
+            assert builder.isCachedColumnBuffersLoaded(), (
+                f"build_ivf_index returned before materializing {name}"
+            )
+            buffers.append(builder.cachedColumnBuffers().id())
+        assert buffers[0] != buffers[1], buffers
 
         import pyspark.sql.functions as F
 
