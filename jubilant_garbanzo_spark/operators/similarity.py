@@ -480,21 +480,25 @@ def build_ivf_index(
     vec_col: str = "embedding",
     bucket_col: str = "label",
 ) -> tuple[DataFrame, DataFrame]:
-    """IVF index BUILD — run once, probe many (VERDICT "What's wrong"
-    #5: round 1 rebuilt centroids inside every query plan).
+    """IVF index BUILD: run once, then probe with any number of query
+    batches (:func:`ivf_probe`).
 
-    Returns ``(assigned, centroids)``, both persisted and materialized:
+    Returns ``(assigned, centroids)``, both persisted and materialized
+    by ONE job before the call returns:
 
-    - ``assigned``: (bkt, vec_id, v) — the coarse-quantized corpus;
-    - ``centroids``: (bkt, centroid) — per-bucket mean vector via
-      posexplode → avg per (bucket, dim) → reassemble. Two small
-      shuffles over |buckets|×dim rows, paid ONCE.
+    - ``assigned``: (bkt, vec_id, v), the coarse-quantized corpus as
+      double arrays;
+    - ``centroids``: (bkt, centroid), the per-bucket mean vector via
+      posexplode → avg per (bucket, dim) → reassemble, cached as ONE
+      partition. It holds |buckets| rows, so a probe's per-query
+      ranking over it needs no exchange and counting it is a 1-task
+      job.
 
+    Counting ``centroids`` fills both caches: its aggregate scans every
+    partition of the persisted ``assigned`` frame (pinned by
+    tests/test_plans.py::test_ivf_probe_plan_reads_cached_index).
     At cluster scale ``assigned`` is a parquet table partitioned by
-    ``bkt`` (probes then read only probed partitions) and ``centroids``
-    a broadcastable side table; locally MEMORY persistence exercises
-    the same plan shape (probes show InMemoryTableScan, pinned by
-    tests/test_plans.py).
+    ``bkt`` (probes then read only probed partitions).
     """
     e = embeddings.select(
         F.col(bucket_col).alias("bkt"),
@@ -514,14 +518,26 @@ def build_ivf_index(
         )
     )
     assigned = e.persist()
-    centroids = centroids.persist()
-    # Materialize now so no probe plan ever contains the build job.
-    # ONE blocking job suffices (round 15, guide §1.2): the centroid
-    # aggregate scans every partition of the persisted `assigned`
-    # frame, so counting it fills BOTH caches — the separate
-    # assigned.count() was a second corpus pass + driver barrier.
+    centroids = centroids.coalesce(1).persist()
     centroids.count()
     return assigned, centroids
+
+
+def same_length(a: Column, b: Column, what: str, score: Column) -> Column:
+    """``score``, or a task failure when the non-null arrays ``a`` and
+    ``b`` differ in length. ``zip_with`` would pad the shorter with
+    NULLs and the score would drop out as NULL; checked in the same
+    projection, so it costs no job."""
+    return F.when(
+        a.isNotNull() & b.isNotNull() & (F.size(a) != F.size(b)),
+        F.raise_error(
+            F.format_string(
+                f"ragged vector: {what} lengths %d != %d",
+                F.size(a),
+                F.size(b),
+            )
+        ),
+    ).otherwise(score)
 
 
 def ivf_probe(
@@ -531,30 +547,60 @@ def ivf_probe(
     k: int = 10,
     n_probe: int = 2,
 ) -> DataFrame:
-    """IVF PROBE against a prebuilt index: rank centroids vs the 1-row
-    query, exact cosine only inside the ``n_probe`` nearest buckets.
-    Scans ~n_probe/|buckets| of the corpus; never touches the build
-    job."""
+    """IVF PROBE of a whole query batch against a prebuilt index
+    (:func:`build_ivf_index`): the exact cosine top-``k`` of each query
+    inside its own ``n_probe`` nearest buckets.
+
+    ``query`` has columns ``(q_id, q_vec)`` and any number of rows;
+    ``q_id`` must be unique within the batch (it keys both per-query
+    rankings). Returns ``(q_id, vec_id, cos_sim)``, at most ``k`` rows
+    per query, ranked by (rounded cosine desc, vec_id asc) and never
+    pairing a query with its own id. ``n_probe`` ≥ |buckets| gives the
+    brute-force top-k.
+
+    Plan: the batch (with its norms) is broadcast ONCE into a cross join
+    with the single-partition ``centroids``; a per-query row_number
+    keeps the ``n_probe`` best buckets with no exchange, carrying the
+    query vectors along. That small frame is then broadcast into a hash
+    join with ``assigned`` on ``bkt``, so each probe scans only its
+    buckets, and one per-query top-``k`` window (a partial
+    WindowGroupLimit before its exchange) ranks the candidates. A
+    vector whose length differs from its query's fails the task."""
+    from pyspark.sql import Window
+
     q = F.broadcast(
         query.select("q_id", as_double(F.col("q_vec")).alias("qv")).select(
             "q_id", "qv", norm(F.col("qv")).alias("qnrm")
         )
     )
-    probed = F.broadcast(
-        centroids.crossJoin(q)
-        .select("bkt", cosine(F.col("centroid"), F.col("qv")).alias("c_sim"))
-        .orderBy(F.desc("c_sim"), F.asc("bkt"))
-        .limit(n_probe)
-        .select("bkt")
+    c_sim = same_length(
+        F.col("centroid"),
+        F.col("qv"),
+        "centroid vs query",
+        cosine(F.col("centroid"), F.col("qv")),
     )
-    raw = dot(F.col("v"), F.col("qv")) / (norm(F.col("v")) * F.col("qnrm"))
+    by_bucket = Window.partitionBy("q_id").orderBy(F.desc("c_sim"), F.asc("bkt"))
+    probed = (
+        centroids.crossJoin(q)
+        .select("q_id", "qv", "qnrm", "bkt", c_sim.alias("c_sim"))
+        .withColumn("rnk", F.row_number().over(by_bucket))
+        .filter(F.col("rnk") <= n_probe)
+        .select("bkt", "q_id", "qv", "qnrm")
+    )
+    raw = same_length(
+        F.col("v"),
+        F.col("qv"),
+        "corpus vector vs query",
+        dot(F.col("v"), F.col("qv")) / (norm(F.col("v")) * F.col("qnrm")),
+    )
+    by_sim = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
-        assigned.join(probed, "bkt", "left_semi")
-        .crossJoin(q)
+        assigned.join(F.broadcast(probed), "bkt")
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select("vec_id", F.round(raw, 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
+        .select("q_id", "vec_id", F.round(raw, 6).alias("cos_sim"))
+        .withColumn("rnk", F.row_number().over(by_sim))
+        .filter(F.col("rnk") <= k)
+        .select("q_id", "vec_id", "cos_sim")
     )
 
 
@@ -567,9 +613,11 @@ def ivf_topk(
     bucket_col: str = "label",
     n_probe: int = 2,
 ) -> DataFrame:
-    """Build-then-probe convenience wrapper (recall vs brute force is
-    unit-tested in tests/test_llm_ops.py; rows-only at the driver —
-    approximate by construction)."""
+    """Build-then-probe convenience wrapper: :func:`build_ivf_index`
+    over ``embeddings``, then one :func:`ivf_probe` of the ``query``
+    batch (same ``(q_id, q_vec)`` input and ``(q_id, vec_id, cos_sim)``
+    output). Approximate by construction; recall against brute force
+    is tested in tests/test_llm_ops.py."""
     assigned, centroids = build_ivf_index(embeddings, id_col, vec_col, bucket_col)
     return ivf_probe(assigned, centroids, query, k=k, n_probe=n_probe)
 

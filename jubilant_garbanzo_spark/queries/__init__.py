@@ -63,10 +63,12 @@ def register(
 #: ADVICE r8's fix for the round-8 failure where a promised rotation
 #: silently never happened.
 #:
-#: Round-16 contents (optimization round 2 of 2, VERDICT r15): five
-#: query bodies changed, all pure physical rewrites with digest-equal
-#: interleaved A/Bs and fresh sf0.01 oracle greens (evidence under
-#: plans/r16/evidence/, write-up in OPTIMIZATION_r16.md).
+#: Contents: the five round-16 body changes (pure physical rewrites
+#: with digest-equal interleaved A/Bs and fresh sf0.01 oracle greens;
+#: evidence under plans/r16/evidence/, write-up in OPTIMIZATION_r16.md),
+#: then five later body changes, each oracle-green at sf0.01 (see
+#: CHANGES.md). The sparse-TFIDF and k-means bodies changed again
+#: since (df cap before the posting collect; ragged vectors fail).
 CHANGED_THIS_ROUND: tuple[str, ...] = (
     # -- round-16 optimization-pass body changes (results identical;
     # each verified by an interleaved same-JVM A/B with collected-row
@@ -79,6 +81,12 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     "text_bigram_pmi",  # n_uni/n_big folded from their count tables
     "dedup_semantic_clusters",  # adaptive-k sizing count moved to the
     #   pre-fan-out frame (no full-width exchange just to count rows)
+    # -- later body changes (results identical, sf0.01 oracle green) --
+    "embed_ann_ivf",  # one batched IVF probe for both query vectors
+    "text_bpe_train",  # each round's merge argmax applied as a literal
+    "text_bpe_roundtrip",  # reads the learned table without an orderBy
+    "text_wordpiece_train",  # lazy argmax is the only path
+    "text_unigram_train",  # lazy argmax is the only path
 )
 
 #: Names promoted to the head of the registry. The driver's correctness
@@ -89,12 +97,13 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
 #: (``scripts/next_window.py --slots 50`` prints the staleness ranking
 #: straight from the committed artifacts), into the window.
 #:
-#: Round 16 (optimization round 2 of 2): the 5 CHANGED bodies + the 45
-#: stalest prior greens straight from `scripts/next_window.py --slots
-#: 50` — the full r8-era residue (23 queries, including the five
-#: youngest r8 refreshes round 15 deferred) and the 22 oldest
-#: r9-greens fill the 50 slots exactly (source_python_datasource, the
-#: 23rd-oldest r9-green, defers to the next rotation).
+#: Current window: the 10 CHANGED bodies + the 40 stalest prior greens
+#: from `scripts/next_window.py --slots 50` — the full r8-era residue
+#: (23 queries) and the 17 oldest r9-greens fill the 50 slots exactly.
+#: The five youngest of round 16's 22 r9-greens (multimodal_binary_meta,
+#: multimodal_feature_extract, pandas_grouped_agg_seam,
+#: pandas_scalar_iter_seam, sink_hilbert_parquet) and
+#: source_python_datasource defer to the next rotation.
 DRIVER_PRIORITY: tuple[str, ...] = (
     *CHANGED_THIS_ROUND,
     # -- staleness refreshes: the full r8-era residue --------------------
@@ -121,7 +130,7 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "timeseries_linear_interpolate",
     "timeseries_seasonal_decompose",
     "window_rolling_distinct_users",
-    # -- staleness refreshes: the 22 oldest r9-greens --------------------
+    # -- staleness refreshes: the 17 oldest r9-greens --------------------
     "cast_coercion",
     "conditional_case",
     "datetime_functions",
@@ -139,11 +148,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "join_theta_range",
     "json_functions",
     "limit_topk",
-    "multimodal_binary_meta",
-    "multimodal_feature_extract",
-    "pandas_grouped_agg_seam",
-    "pandas_scalar_iter_seam",
-    "sink_hilbert_parquet",
 )
 
 def load_all() -> dict[str, QuerySpec]:

@@ -1396,28 +1396,24 @@ def embed_norms(spark, sf_dir):
     tags=("llm", "embedding", "ann"),
 )
 def embed_ann_ivf(spark, sf_dir):
-    """IVF-style ANN, build-once-probe-many: the index (bucket
-    assignments + centroids) is materialized ONCE, then BOTH query
-    vectors probe it — each probe scans 2/10ths of the corpus and its
-    plan reads the cached index (no centroid job; pinned by
+    """IVF-style ANN, build once, probe once per query batch: the index
+    (bucket assignments + single-partition centroids) is materialized
+    by one job, then ONE ``S.ivf_probe`` answers both query
+    vectors (vec_id 0 and 1). Each query scans only its 2 nearest
+    buckets, and the probe plan reads the cached index (pinned by
     tests/test_plans.py::test_ivf_probe_plan_reads_cached_index).
     Fully oracle-checked: DuckDB replays the identical centroid →
-    bucket-ranking → in-bucket top-k pipeline (see oracle), so the
-    probed-bucket choice and the returned neighbor set are pinned
-    cross-engine, not just row counts."""
+    per-query bucket ranking → in-bucket top-k pipeline (see oracle),
+    so the probed-bucket choice and the returned neighbor set are
+    pinned cross-engine, not just row counts."""
     e = load_table(spark, sf_dir, "embeddings")
     assigned, centroids = S.build_ivf_index(e)
-    probes = []
-    for qid in (0, 1):
-        q = e.filter(F.col("vec_id") == qid).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        probes.append(
-            S.ivf_probe(assigned, centroids, q, k=10, n_probe=2).select(
-                F.lit(qid).alias("q_id"), "vec_id", "cos_sim"
-            )
-        )
-    return probes[0].unionAll(probes[1])
+    q = e.filter(F.col("vec_id").isin(0, 1)).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    return S.ivf_probe(assigned, centroids, q, k=10, n_probe=2).select(
+        F.col("q_id").cast("int").alias("q_id"), "vec_id", "cos_sim"
+    )
 
 
 # -- multimodal --------------------------------------------------------------
@@ -2750,13 +2746,21 @@ def embed_kmeans_lloyd(spark, sf_dir):
         ).select(
             "cid", F.transform("pq", lambda s: s["qc"]).alias("ca")
         )
-        # integer multiply, not **, which would promote to double
-        dist = F.aggregate(
-            F.zip_with(
-                F.col("qv"), F.col("ca"), lambda a, b: (a - b) * (a - b)
+        # integer multiply, not **, which would promote to double. A
+        # vector whose length differs from the centroid's fails the
+        # task: zip_with would pad it with NULLs, and a NULL distance
+        # would win the struct-min silently.
+        dist = S.same_length(
+            F.col("qv"),
+            F.col("ca"),
+            "vector vs centroid",
+            F.aggregate(
+                F.zip_with(
+                    F.col("qv"), F.col("ca"), lambda a, b: (a - b) * (a - b)
+                ),
+                F.lit(0).cast("bigint"),
+                lambda acc, z: acc + z,
             ),
-            F.lit(0).cast("bigint"),
-            lambda acc, z: acc + z,
         )
         return (
             xarr.crossJoin(F.broadcast(ca))
@@ -4806,6 +4810,46 @@ _SPARSE_DF_CAP = 20
 _SPARSE_COS_THRESHOLD = 0.6
 
 
+def capped_postings(sh, n_docs):
+    """Weighted posting lists ``(s, ds)`` of every shingle ``s`` with
+    df <= ``_SPARSE_DF_CAP``, from ``sh`` = (doc_id, s, tf) keyed by
+    (doc_id, s) over ``n_docs`` documents; ``ds`` is an array of
+    ``(doc_id, w)`` with w = tf * idf in integer millionths.
+
+    The cap is applied BEFORE the lists are built: df is counted first,
+    by a window over ``s`` on the same hash partitioning the collect
+    uses (no extra exchange, no extra job), the terms over the cap are
+    filtered out, and only then are the lists collected. No
+    collect_list buffer ever holds more than ``_SPARSE_DF_CAP`` entries,
+    however common a shingle is; the window holds a term's rows in
+    Spark's spillable row buffer, not in one aggregation buffer (the
+    plan shape is pinned by
+    tests/test_plans.py::test_sparse_tfidf_df_cap_precedes_collect).
+
+    Each list holds distinct doc_ids, so the i<j positional expansion in
+    :func:`sparse_tfidf_components` enumerates every unordered pair of a
+    term exactly once, with no posting self-join."""
+    idf = F.round(
+        F.log(F.lit(float(n_docs)) / F.col("df")) * 1000000.0
+    ).cast("bigint")
+    return (
+        sh.withColumn("df", F.count("*").over(Window.partitionBy("s")))
+        .filter(F.col("df") <= _SPARSE_DF_CAP)
+        .groupBy("s", "df")
+        .agg(F.collect_list(F.struct("doc_id", "tf")).alias("ds"))
+        .select(
+            "s",
+            F.transform(
+                "ds",
+                lambda e: F.struct(
+                    e["doc_id"].alias("doc_id"),
+                    (e["tf"] * idf).alias("w"),
+                ),
+            ).alias("ds"),
+        )
+    )
+
+
 def sparse_tfidf_components(d, agg_mode=None):
     """The production stages of `text_sparse_tfidf_cosine`, split so
     scale benchmarks can count candidate pairs on EXACTLY the shipped
@@ -4866,43 +4910,7 @@ def sparse_tfidf_components(d, agg_mode=None):
     n_docs = (
         d.filter(F.size(ws) >= 3).select("doc_id").distinct().count()
     )
-    # Round 16 (VERDICT r15 #5, guide §2.3 "aggregate before you
-    # shuffle" / §2.4): the posting SELF-JOIN is gone. One groupBy(s)
-    # computes df AND packs the term's posting list into an array
-    # (bounded: the df cap keeps every list <= _SPARSE_DF_CAP entries),
-    # so (a) the old sh⋈df join disappears — df rides the same
-    # aggregate — and (b) candidate pairs come from an in-array
-    # pairwise expansion of each posting list instead of re-shuffling
-    # the whole posting table twice through an equi-join. Exchange
-    # count on the pair path: 3 (sh agg, byterm agg, dots agg) vs the
-    # old 6 (sh agg, df agg, sh⋈df shuffle, a-side, b-side, dots agg).
-    # Pair semantics identical: each term's list holds distinct doc_ids
-    # (sh is keyed by (doc_id, s)), the i<j positional expansion
-    # enumerates every unordered pair exactly once, least/greatest
-    # canonicalizes orientation, and w products/sums are the same
-    # integers in the same (bigint | decimal) aggregation paths.
-    idf = F.round(
-        F.log(F.lit(float(n_docs)) / F.col("df")) * 1000000.0
-    ).cast("bigint")
-    byterm = (
-        sh.groupBy("s")
-        .agg(
-            F.count("*").cast("bigint").alias("df"),
-            F.collect_list(F.struct("doc_id", "tf")).alias("ds"),
-        )
-        .filter(F.col("df") <= _SPARSE_DF_CAP)
-        .select(
-            "s",
-            F.transform(
-                "ds",
-                lambda e: F.struct(
-                    e["doc_id"].alias("doc_id"),
-                    (e["tf"] * idf).alias("w"),
-                ),
-            ).alias("ds"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    byterm = capped_postings(sh, n_docs).localCheckpoint(eager=True)
     post = byterm.select("s", F.explode("ds").alias("e")).select(
         F.col("e.doc_id").alias("doc_id"), "s", F.col("e.w").alias("w")
     )
@@ -5027,10 +5035,11 @@ def text_sparse_tfidf_cosine(spark, sf_dir):
     (DECIMAL(38,0) sums) and only the final cosine is a fixed-shape
     IEEE expression. Scale: the df cap drops stop-shingles from the
     term space (bounded posting lists => linear candidates — same
-    discipline as the rarest-first prefix index); round 16 replaced the
-    posting-list SELF-JOIN with an in-array pairwise expansion of each
-    term's (<= df-cap long) posting list, so the pair path is now three
-    hash aggregates and zero joins (see sparse_tfidf_components).
+    discipline as the rarest-first prefix index). Posting lists are
+    built only for terms already under the df cap (a windowed df count
+    and its filter come first), and candidate pairs come from an in-array
+    pairwise expansion of each (<= df-cap long) list, not a posting
+    self-join (see sparse_tfidf_components).
     (Round 15: scan fan-out was tried here and NOT kept — interleaved
     sf0.1 A/B was 1.13x/0.94x/0.79x across three sessions, i.e. noise;
     the pair stage dominates, not the single-task sh build.)"""

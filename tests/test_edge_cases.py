@@ -366,6 +366,19 @@ def test_kmeans_two_tight_groups_split(spark, tmp_path):
     assert all(r.inertia_q2 == 0 for r in out.values())
 
 
+def test_kmeans_rejects_ragged_vectors(spark, tmp_path):
+    """A vector shorter than the centroids fails the assignment instead
+    of scoring a NULL distance (which would win the struct-min and
+    land it in cluster 0 silently)."""
+    from jubilant_garbanzo_spark.queries import load_all
+
+    rows = [(i, [float(i), 1.0, 0.5], 0) for i in range(8)]
+    rows.append((8, [8.0, 1.0], 0))
+    _write_embeddings(spark, str(tmp_path), rows)
+    with pytest.raises(Exception, match="ragged vector"):
+        load_all()["embed_kmeans_lloyd"].fn(spark, str(tmp_path)).collect()
+
+
 def _write_events(spark, path, rows):
     schema = T.StructType(
         [

@@ -77,14 +77,11 @@ def test_simhash_identical_and_near_texts(spark):
     assert d[(1, 4)] >= 16, f"unrelated docs only {d[(1,4)]} bits apart"
 
 
-def test_ivf_recall_on_clustered_data(spark):
-    """IVF probing 2/4 buckets must recover the exact top-10 when the
-    data actually clusters (the fixture embeddings are unclustered
-    random vectors, so recall there is meaningless — this constructs
-    4 well-separated clusters deterministically)."""
+def _four_clusters(spark, dim=16):
+    """200 vectors in 4 well-separated clusters of 50 (vec_id
+    cluster*50 + m, label = cluster), built deterministically."""
     import math
 
-    dim = 16
     rows = []
     for cluster in range(4):
         base = [math.sin(cluster * 37 + d) for d in range(dim)]
@@ -93,16 +90,105 @@ def test_ivf_recall_on_clustered_data(spark):
                 base[d] + 0.05 * math.sin(m * 13 + d + cluster) for d in range(dim)
             ]
             rows.append((cluster * 50 + m, cluster, [float(x) for x in vec]))
-    e = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
-    q = e.filter(F.col("vec_id") == 3).select(
+    return spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<float>"
+    )
+
+
+def _queries(e, ids):
+    return e.filter(F.col("vec_id").isin(*ids)).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
+
+
+def test_ivf_recall_on_clustered_data(spark):
+    """IVF probing 2/4 buckets must recover the exact top-10 when the
+    data actually clusters (the fixture embeddings are unclustered
+    random vectors, so recall there is meaningless — this constructs
+    4 well-separated clusters deterministically)."""
+    e = _four_clusters(spark)
+    q = _queries(e, [3])
     exact = {r["vec_id"] for r in S.brute_force_topk(e, q, k=10).collect()}
     approx = {
         r["vec_id"]
         for r in S.ivf_topk(e, q, k=10, bucket_col="label", n_probe=2).collect()
     }
     assert len(exact & approx) >= 9, f"IVF recall {len(exact & approx)}/10"
+
+
+def test_ivf_batch_probe_equals_single_probes(spark):
+    """One probe of a query batch returns, row for row, the union of
+    one probe per query — here 4 queries, one from each cluster, with
+    n_probe=1 so each query ranks a different bucket first."""
+    e = _four_clusters(spark)
+    assigned, centroids = S.build_ivf_index(e)
+    try:
+        ids = [3, 57, 120, 199]
+        batch = S.ivf_probe(assigned, centroids, _queries(e, ids), k=5, n_probe=1)
+        got = sorted(tuple(r) for r in batch.collect())
+        single = sorted(
+            tuple(r)
+            for qid in ids
+            for r in S.ivf_probe(
+                assigned, centroids, _queries(e, [qid]), k=5, n_probe=1
+            ).collect()
+        )
+        assert got == single
+        assert len(got) == 5 * len(ids)
+        # each query's neighbors come from its own cluster
+        assert all(vec_id // 50 == q_id // 50 for q_id, vec_id, _ in got), got
+    finally:
+        assigned.unpersist()
+        centroids.unpersist()
+
+
+def test_ivf_probe_empty_batch(spark):
+    """An empty query batch is a valid batch: 0 rows, same schema."""
+    e = _four_clusters(spark)
+    out = S.ivf_topk(e, _queries(e, []), k=10, n_probe=2)
+    assert out.columns == ["q_id", "vec_id", "cos_sim"]
+    assert out.collect() == []
+
+
+@pytest.mark.parametrize("n_probe", [4, 9])
+def test_ivf_probe_every_bucket_is_brute_force(spark, n_probe):
+    """With n_probe >= |buckets| (4) nothing is pruned: each query's
+    rows equal the exact brute-force top-k, cosines bit for bit."""
+    e = _four_clusters(spark)
+    ids = [0, 77, 140]
+    got = S.ivf_topk(e, _queries(e, ids), k=7, n_probe=n_probe).collect()
+    for qid in ids:
+        exact = [
+            (r["vec_id"], r["cos_sim"])
+            for r in S.brute_force_topk(e, _queries(e, [qid]), k=7).collect()
+        ]
+        mine = sorted(
+            ((r["vec_id"], r["cos_sim"]) for r in got if r["q_id"] == qid),
+            key=lambda t: (-t[1], t[0]),
+        )
+        assert mine == exact, qid
+
+
+@pytest.mark.parametrize("ragged", ["query", "corpus"])
+def test_ivf_probe_rejects_ragged_vectors(spark, ragged):
+    """A vector whose length differs from its query's fails the probe
+    instead of scoring NULL and dropping out: a too-long query (caught
+    against the centroids) or a too-short corpus vector in a probed
+    bucket (caught in the candidate scoring)."""
+    e = _four_clusters(spark)
+    q = _queries(e, [3])
+    if ragged == "query":
+        q = q.select("q_id", F.concat("q_vec", F.array(F.lit(0.0))).alias("q_vec"))
+    else:
+        e = e.select(
+            "vec_id",
+            "label",
+            F.when(F.col("vec_id") == 5, F.slice("embedding", 1, 15))
+            .otherwise(F.col("embedding"))
+            .alias("embedding"),
+        )
+    with pytest.raises(Exception, match="ragged vector"):
+        S.ivf_topk(e, q, k=10, n_probe=2).collect()
 
 
 def test_asof_join_semantics(spark):

@@ -210,6 +210,94 @@ def test_ivf_probe_plan_reads_cached_index(spark, sf_dir):
         centroids.unpersist()
 
 
+def _plan_nodes(root):
+    """Physical nodes of the JVM plan ``root``, top-down, descending
+    into adaptive query stages but NOT into cached relations (whose
+    build plan the printed text repeats under InMemoryRelation), and
+    skipping the codegen wrappers that repeat their child's line."""
+    out = []
+
+    def walk(node):
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if kind.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if kind not in ("WholeStageCodegenExec", "InputAdapter"):
+            out.append(node)
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(root)
+    return out
+
+
+def _executed_nodes(df):
+    return _plan_nodes(df._jdf.queryExecution().executedPlan())
+
+
+def _header(node) -> str:
+    """The node's own line of the plan tree (e.g. ``Exchange
+    hashpartitioning(q_id#1L, 8), ...``)."""
+    return node.toString().splitlines()[0]
+
+
+def _broadcast_cross_joins(df):
+    """``(join type, build-side columns, streamed-side columns)`` of
+    every BroadcastNestedLoopJoin in ``df``'s executed plan."""
+
+    def names(plan):
+        attrs = plan.output()
+        return sorted(attrs.apply(i).name() for i in range(attrs.size()))
+
+    joins = []
+    for node in _executed_nodes(df):
+        if node.getClass().getSimpleName() != "BroadcastNestedLoopJoinExec":
+            continue
+        sides = (node.right(), node.left())
+        if node.buildSide().toString() != "BuildRight":
+            sides = sides[::-1]
+        joins.append((node.joinType().toString(), *map(names, sides)))
+    return joins
+
+
+def test_ivf_probe_is_one_batch_plan(spark, sf_dir, count_jobs):
+    """A warm embed_ann_ivf is 5 jobs: 1 to build the index, 4 to
+    collect the probe of both queries. The probe's executed plan has
+    one hash exchange (the per-query top-k), none under the centroid
+    ranking (the single-partition centroids need none), and broadcasts
+    the query batch once, into the centroid cross join; the only other
+    broadcast is the probed-bucket table."""
+    fn = SPECS["embed_ann_ivf"].fn
+    fn(spark, sf_dir).collect()  # warm: parquet footer memo, codegen
+    df, build_jobs = count_jobs(lambda: fn(spark, sf_dir))
+    rows, collect_jobs = count_jobs(df.collect)
+    assert rows
+    assert (build_jobs, collect_jobs) == (1, 4)
+
+    nodes = _executed_nodes(df)
+    headers = [_header(n) for n in nodes]
+    exchanges = [h for h in headers if h.startswith("Exchange")]
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0].startswith("Exchange hashpartitioning(q_id"), exchanges
+    broadcasts = [h for h in headers if h.startswith("BroadcastExchange")]
+    assert len(broadcasts) == 2, broadcasts
+    assert sum("IdentityBroadcastMode" in h for h in broadcasts) == 1, broadcasts
+
+    # the centroid ranking: everything under the probed-bucket broadcast
+    (probed,) = [
+        n for n, h in zip(nodes, headers)
+        if h.startswith("BroadcastExchange HashedRelationBroadcastMode")
+    ]
+    under = [_header(n) for n in _plan_nodes(probed)]
+    assert any(h.startswith("Window") for h in under), under
+    assert not any(h.startswith("Exchange") for h in under), under
+    assert _broadcast_cross_joins(df) == [
+        ("Cross", ["q_id", "qnrm", "qv"], ["bkt", "centroid"])
+    ]
+
+
 def test_candidate_joins_are_equi_joins(spark, sf_dir):
     """The re-blocked similarity/dedup candidate stages must plan as
     equi-joins (hash/sort-merge on band key or shingle) — never a
@@ -586,14 +674,54 @@ def test_kmeans_no_cartesian_and_jvm_side(spark, sf_dir):
     assert strategies, "no joins found in plan"
     assert "CartesianProduct" not in strategies, strategies
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # The only nested-loop joins allowed are broadcast cross-joins
-    # (the k-row centroid side is the build side by construction —
-    # it is the only frame the body broadcasts into a cross join).
+    # The only nested-loop joins allowed are broadcast cross-joins whose
+    # build side is the k-row centroid-array table (cid, ca) and whose
+    # streamed side is the vector table. The body broadcasts one per
+    # iteration, so at least one must be found, and the regex must see
+    # every nested-loop join the plan text names.
     import re
 
-    for m in re.finditer(r"BroadcastNestedLoopJoin \w+, (\w+)", plan):
-        assert m.group(1) == "Cross", plan[:2000]
+    named = re.findall(r"BroadcastNestedLoopJoin (\w+), (\w+)", plan)
+    assert len(named) == plan.count("BroadcastNestedLoopJoin") >= 1, plan[:2000]
+    assert all(m == ("BuildRight", "Cross") for m in named), named
+    joins = _broadcast_cross_joins(df)
+    assert len(joins) == len(named), (joins, named)
+    for join_type, build, stream in joins:
+        assert (join_type, build) == ("Cross", ["ca", "cid"]), joins
+        assert "vec_id" in stream, joins
     assert "Python" not in plan, plan[:2000]
+
+
+def test_sparse_tfidf_df_cap_precedes_collect(spark):
+    """The sparse-TFIDF posting lists are collected only for terms
+    already under the df cap: below the collect_list aggregate sits the
+    df filter over a per-term count window, with one exchange (by term)
+    under both, so a stop-shingle never builds a corpus-sized list. A
+    30-doc stop-shingle (cap 20) is gone from the output and every list
+    is within the cap."""
+    from jubilant_garbanzo_spark.queries.llm import _SPARSE_DF_CAP, capped_postings
+
+    rows = [(d, "stop", 1) for d in range(_SPARSE_DF_CAP + 10)]
+    rows += [(d, f"t{d % 5}", 2) for d in range(_SPARSE_DF_CAP + 10)]
+    sh = spark.createDataFrame(rows, "doc_id long, s string, tf long")
+    df = capped_postings(sh, _SPARSE_DF_CAP + 10)
+    lists = {r["s"]: len(r["ds"]) for r in df.collect()}
+    assert lists == {f"t{i}": 6 for i in range(5)}, lists
+
+    (collect,) = [
+        n for n in _executed_nodes(df)
+        if "partial_collect_list(" in _header(n)
+    ]
+    below = [_header(n) for n in _plan_nodes(collect)]
+    cap = [
+        i for i, h in enumerate(below)
+        if h.startswith("Filter") and f"<= {_SPARSE_DF_CAP})" in h
+    ]
+    assert len(cap) == 1, below
+    window = below[cap[0] + 1]
+    assert window.startswith("Window [count(1)"), below
+    exchanges = [h for h in below if h.startswith("Exchange")]
+    assert len(exchanges) == 1 and "hashpartitioning(s#" in exchanges[0], below
 
 
 def test_global_row_number_no_global_data_sort(spark, sf_dir):
