@@ -344,10 +344,12 @@ def train_merges(words: DataFrame, rounds: int = N_TRAIN_MERGES) -> DataFrame:
     jobs — the pair-count shuffle-map job and the argmax job — and a
     round with no adjacent pair left ends training early.
 
-    Only the dict is checkpointed (once, eagerly). Later rounds stack
-    their folds on it unmaterialized: re-running earlier folds is
-    narrow, map-only work over the dict, which costs less than a
-    blocking checkpoint job per round.
+    Only the dict is checkpointed, lazily: round 0's pair-count map
+    job computes it and writes its blocks, so the checkpoint costs no
+    job of its own. Later rounds stack their folds on those blocks
+    unmaterialized: re-running earlier folds is narrow, map-only work
+    over the dict, which costs less than a blocking checkpoint job per
+    round.
 
     The learned rows (at most ``rounds``, in ``merge_rank`` order)
     come back as a driver-built local relation (pandas through Arrow),
@@ -362,7 +364,7 @@ def train_merges(words: DataFrame, rounds: int = N_TRAIN_MERGES) -> DataFrame:
     toks = words.select(
         F.expr("filter(split(word, ''), c -> c <> '')").alias("t"),
         F.col("cnt").cast("bigint").alias("cnt"),
-    ).filter(F.size("t") >= 1).localCheckpoint(eager=True)
+    ).filter(F.size("t") >= 1).localCheckpoint(eager=False)
     fold = (
         "aggregate(slice(t, 2, size(t) - 1), array(element_at(t, 1)),"
         " (acc, x) -> IF(element_at(acc, -1) = pa AND x = pb,"

@@ -181,29 +181,67 @@ def _dir_fingerprint(cache_key: tuple) -> tuple:
     return tuple(fps)
 
 
+def _shingle_signatures(
+    docs: DataFrame, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(sh, sigs)``: per-doc shingle sets and their MinHash
+    signatures, each eagerly localCheckpointed."""
+    # Round 15, measured and KEPT AS IS: fanning the projected docs out
+    # to cluster parallelism before the shingle build (the fan_out_scan
+    # recipe, gated on the plan's pre-shuffle partition count) read
+    # 0.97x net over the 4-query family in a fresh-JVM-per-session A/B
+    # — the exchange ships full text bytes, which costs about what the
+    # single-task shingle+hash build saves, and the production
+    # multi-file layout makes the gate a no-op anyway.
+    sh = docs.select(
+        F.col(id_col).alias("id"),
+        shingles(F.col(text_col)).alias("sh"),
+    ).localCheckpoint(eager=True)
+    sigs = minhash_signatures(sh, "id", "sh").localCheckpoint(eager=True)
+    return sh, sigs
+
+
+def _band_pairs(sigs: DataFrame) -> DataFrame:
+    """Distinct band-collision pairs ``(id_a < id_b)`` of a signature
+    table: explode one row per (doc, band key), hash-join on the key.
+    Both join sides explode the same (checkpointed) signatures, so the
+    band table itself needs no materialization."""
+    banded = sigs.select("id", F.explode(band_keys()).alias("band"))
+    return (
+        banded.alias("x")
+        .join(banded.alias("y"), "band")
+        .filter(F.col("x.id") < F.col("y.id"))
+        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+        .distinct()
+    )
+
+
 def minhash_index(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     cache_key: tuple | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The shared MinHash index build: ``(sh, sigs, banded)``, each
-    eagerly localCheckpointed.
+    """The shared MinHash index build: ``(sh, sigs, cand)`` — shingle
+    sets, signatures and the distinct band-collision pairs
+    ``(id_a < id_b)`` — each eagerly localCheckpointed. The band table
+    the pairs come from is an unmaterialized intermediate.
 
     Materializing ONCE matters twice over (VERDICT r7 #6):
 
     - within one query: Catalyst does not CSE sibling subplans, so
-      without the checkpoints the band self-join runs the whole
-      shingle→signature pipeline TWICE and the verify stage two more
-      times (the r7 plan audit counted 12 parquet scans / 0 reused
-      exchanges across this family);
+      without the checkpoints the verify stage would re-run the
+      shingle→signature pipeline for each side of its pair joins (the
+      r7 plan audit counted 12 parquet scans / 0 reused exchanges
+      across this family);
     - across queries: ``dedup_minhash_lsh``, ``dedup_minhash_accuracy``
-      and ``dedup_cluster_cc`` all start from the same index — with
-      ``cache_key`` set they share one build per session instead of
-      paying the shingle pipeline 3× (the headline-set cost VERDICT r7
-      flagged). At cluster scale this is the standard "build the index
-      once, probe many" deployment: ``sh``/``sigs`` as a parquet side
-      table, ``banded`` partitioned by band key.
+      and the ``dedup_cluster_*`` queries all start from the same
+      index — with ``cache_key`` set they share one build per session,
+      candidates included, so a warm query only verifies. Candidates
+      depend on the corpus and the fixed ``N_PERM``/``N_BANDS``, never
+      on a threshold, so one entry serves every caller. At cluster
+      scale this is the standard "build the index once, probe many"
+      deployment: ``sh``/``sigs``/``cand`` as parquet side tables.
 
     Pass ``cache_key`` ONLY for immutable inputs (the fixture tables,
     keyed by sf_dir) — ad-hoc DataFrames (tests) must keep the default
@@ -218,22 +256,8 @@ def minhash_index(
         hit = _MINHASH_INDEX_CACHE.get(key)
         if hit is not None:
             return hit
-    # Round 15, measured and KEPT AS IS: fanning the projected docs out
-    # to cluster parallelism before the shingle build (the fan_out_scan
-    # recipe, gated on the plan's pre-shuffle partition count) read
-    # 0.97x net over the 4-query family in a fresh-JVM-per-session A/B
-    # — the exchange ships full text bytes, which costs about what the
-    # single-task shingle+hash build saves, and the production
-    # multi-file layout makes the gate a no-op anyway.
-    sh = docs.select(
-        F.col(id_col).alias("id"),
-        shingles(F.col(text_col)).alias("sh"),
-    ).localCheckpoint(eager=True)
-    sigs = minhash_signatures(sh, "id", "sh").localCheckpoint(eager=True)
-    banded = sigs.select(
-        "id", F.explode(band_keys()).alias("band")
-    ).localCheckpoint(eager=True)
-    out = (sh, sigs, banded)
+    sh, sigs = _shingle_signatures(docs, id_col, text_col)
+    out = (sh, sigs, _band_pairs(sigs).localCheckpoint(eager=True))
     if cache_key is not None:
         _MINHASH_INDEX_CACHE[key] = out
     return out
@@ -247,18 +271,17 @@ def minhash_band_candidates(
 ) -> tuple[DataFrame, DataFrame]:
     """The LSH candidate-generation stage alone: ``(sh, cand)`` where
     ``sh`` is the per-doc shingle set and ``cand`` the distinct
-    band-collision pairs (id_a < id_b). Split out so scale benchmarks
-    (scripts/bench_scale.py) can count candidates on EXACTLY the
-    production stage rather than a reimplementation."""
-    sh, _sigs, banded = minhash_index(docs, id_col, text_col, cache_key)
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), "band")
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-    )
-    return sh, cand
+    band-collision pairs (id_a < id_b). With ``cache_key`` both are the
+    session's memoized :func:`minhash_index` frames (the same objects
+    on every call); without it ``cand`` is the unmaterialized band
+    equi-join over freshly checkpointed signatures. Split out so scale
+    benchmarks (scripts/bench_scale.py) can count candidates on EXACTLY
+    the production stage rather than a reimplementation."""
+    if cache_key is not None:
+        sh, _sigs, cand = minhash_index(docs, id_col, text_col, cache_key)
+        return sh, cand
+    sh, sigs = _shingle_signatures(docs, id_col, text_col)
+    return sh, _band_pairs(sigs)
 
 
 def minhash_lsh_pairs(
@@ -275,7 +298,9 @@ def minhash_lsh_pairs(
     (candidates) → distinct pairs → exact-Jaccard verify against the
     shingle sets. Only candidate pairs are ever materialized; the band
     join shuffles 1 row per (doc, band), and AQE skew-split handles a
-    boilerplate-heavy bucket.
+    boilerplate-heavy bucket. With ``cache_key`` everything up to the
+    distinct pairs comes from the session's :func:`minhash_index`
+    entry, so a repeated call runs only the verify joins.
     """
     sh, cand = minhash_band_candidates(docs, id_col, text_col, cache_key)
     sh_a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))

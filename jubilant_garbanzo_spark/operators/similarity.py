@@ -324,7 +324,7 @@ def hyperplane_candidates(
     # verify joins in similarity_join are sibling subplans Catalyst
     # will not CSE — without this the 4×bits hyperplane dot products
     # run twice and the norm fold four times. The build-once/probe-many
-    # index step, same as minhash_band_candidates.
+    # index step, same as dedup.minhash_index.
     e = (
         embeddings.select(
             F.col(id_col).alias("id"),
@@ -483,19 +483,20 @@ def build_ivf_index(
     """IVF index BUILD: run once, then probe with any number of query
     batches (:func:`ivf_probe`).
 
-    Returns ``(assigned, centroids)``, both persisted and materialized
-    by ONE job before the call returns:
+    Returns ``(assigned, centroids)``, both persisted and launching no
+    job:
 
     - ``assigned``: (bkt, vec_id, v), the coarse-quantized corpus as
       double arrays;
     - ``centroids``: (bkt, centroid), the per-bucket mean vector via
       posexplode → avg per (bucket, dim) → reassemble, cached as ONE
       partition. It holds |buckets| rows, so a probe's per-query
-      ranking over it needs no exchange and counting it is a 1-task
-      job.
+      ranking over it needs no exchange.
 
-    Counting ``centroids`` fills both caches: its aggregate scans every
-    partition of the persisted ``assigned`` frame (pinned by
+    The first probe fills both caches (each arrives as a
+    ``TableCacheQueryStage``, and the centroid aggregate scans every
+    partition of the persisted ``assigned`` frame); later probes, and
+    a rebuild over the same embeddings plan, only read them (pinned by
     tests/test_plans.py::test_ivf_probe_plan_reads_cached_index).
     At cluster scale ``assigned`` is a parquet table partitioned by
     ``bkt`` (probes then read only probed partitions).
@@ -518,9 +519,7 @@ def build_ivf_index(
         )
     )
     assigned = e.persist()
-    centroids = centroids.coalesce(1).persist()
-    centroids.count()
-    return assigned, centroids
+    return assigned, centroids.coalesce(1).persist()
 
 
 def same_length(a: Column, b: Column, what: str, score: Column) -> Column:

@@ -87,6 +87,12 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     "text_bpe_roundtrip",  # reads the learned table without an orderBy
     "text_wordpiece_train",  # lazy argmax is the only path
     "text_unigram_train",  # lazy argmax is the only path
+    "dedup_minhash_lsh",  # verifies the memoized band candidates
+    "dedup_cluster_cc",  # clusters pairs from the memoized candidates
+    "dedup_cluster_keep_best",  # clusters pairs from the memoized candidates
+    "dedup_cluster_incremental",  # pairs from the memoized candidates
+    "dedup_minhash_accuracy",  # reads the memoized candidates, no own
+    #   copy of the band self-join
 )
 
 #: Names promoted to the head of the registry. The driver's correctness
@@ -97,13 +103,15 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
 #: (``scripts/next_window.py --slots 50`` prints the staleness ranking
 #: straight from the committed artifacts), into the window.
 #:
-#: Current window: the 10 CHANGED bodies + the 40 stalest prior greens
+#: Current window: the 15 CHANGED bodies + the 35 stalest prior greens
 #: from `scripts/next_window.py --slots 50` — the full r8-era residue
-#: (23 queries) and the 17 oldest r9-greens fill the 50 slots exactly.
-#: The five youngest of round 16's 22 r9-greens (multimodal_binary_meta,
-#: multimodal_feature_extract, pandas_grouped_agg_seam,
-#: pandas_scalar_iter_seam, sink_hilbert_parquet) and
-#: source_python_datasource defer to the next rotation.
+#: (23 queries) and 12 r9-greens fill the 50 slots exactly. Five
+#: r9-greens left the window when the dedup family joined it
+#: (join_salted_skew, join_self_pairs, join_theta_range,
+#: json_functions, limit_topk); they defer to the next rotation with
+#: multimodal_binary_meta, multimodal_feature_extract,
+#: pandas_grouped_agg_seam, pandas_scalar_iter_seam,
+#: sink_hilbert_parquet and source_python_datasource.
 DRIVER_PRIORITY: tuple[str, ...] = (
     *CHANGED_THIS_ROUND,
     # -- staleness refreshes: the full r8-era residue --------------------
@@ -130,7 +138,7 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "timeseries_linear_interpolate",
     "timeseries_seasonal_decompose",
     "window_rolling_distinct_users",
-    # -- staleness refreshes: the 17 oldest r9-greens --------------------
+    # -- staleness refreshes: 12 of the r9-greens ------------------------
     "cast_coercion",
     "conditional_case",
     "datetime_functions",
@@ -143,11 +151,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "join_broadcast_star",
     "join_bucketed_colocated",
     "join_cross",
-    "join_salted_skew",
-    "join_self_pairs",
-    "join_theta_range",
-    "json_functions",
-    "limit_topk",
 )
 
 def load_all() -> dict[str, QuerySpec]:

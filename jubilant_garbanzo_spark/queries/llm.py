@@ -1397,11 +1397,12 @@ def embed_norms(spark, sf_dir):
 )
 def embed_ann_ivf(spark, sf_dir):
     """IVF-style ANN, build once, probe once per query batch: the index
-    (bucket assignments + single-partition centroids) is materialized
-    by one job, then ONE ``S.ivf_probe`` answers both query
-    vectors (vec_id 0 and 1). Each query scans only its 2 nearest
-    buckets, and the probe plan reads the cached index (pinned by
-    tests/test_plans.py::test_ivf_probe_plan_reads_cached_index).
+    (bucket assignments + single-partition centroids) is persisted
+    without a job, then ONE ``S.ivf_probe`` answers both query vectors
+    (vec_id 0 and 1). The first probe in a session fills the index
+    caches; every later one only reads them (pinned by
+    tests/test_plans.py::test_ivf_probe_plan_reads_cached_index). Each
+    query scans only its 2 nearest buckets.
     Fully oracle-checked: DuckDB replays the identical centroid →
     per-query bucket ranking → in-bucket top-k pipeline (see oracle),
     so the probed-bucket choice and the returned neighbor set are
@@ -3550,36 +3551,29 @@ def dedup_minhash_accuracy(spark, sf_dir):
     red-flags any drift in the hash family, the banding, or the
     shingle construction.
 
-    Scale shape (round-7 rewrite, VERDICT r6 item 3): candidates come
-    from the SAME banded equi-join as dedup_minhash_lsh — explode band
-    keys, hash-join on the key, distinct pairs. The previous body
-    joined two 32-column signature frames on ``(id_a < id_b) AND
-    (OR-of-band-equalities)``, which Catalyst can only execute as a
-    nested-loop over all N² pairs — the 12.5 s x1 outlier the r6
-    verdict flagged. The band-key string (``concat_ws('_', band_idx,
-    m...)``, numeric components) is injective, so the candidate SET is
-    unchanged and the OR-form oracle below still matches bit-for-bit.
+    Scale shape (round-7 rewrite, VERDICT r6 item 3): candidates are
+    the SAME memoized banded equi-join pairs dedup_minhash_lsh verifies
+    (``D.minhash_index``) — explode band keys, hash-join on the key,
+    distinct pairs. The round-6 body joined two 32-column signature
+    frames on ``(id_a < id_b) AND (OR-of-band-equalities)``, which
+    Catalyst can only execute as a nested-loop over all N² pairs — the
+    12.5 s x1 outlier the r6 verdict flagged. The band-key string
+    (``concat_ws('_', band_idx, m...)``, numeric components) is
+    injective, so the candidate SET is unchanged and the OR-form oracle
+    below still matches bit-for-bit.
     The 32 per-perm columns are packed into ONE array column before the
     pair joins; agreement is a ``zip_with``/``aggregate`` fold on two
     arrays instead of a 64-column comparison row.
     """
     d = load_table(spark, sf_dir, "documents")
     # Shared build-once index (operators/dedup.minhash_index): the
-    # shingle sets feed the signature pipeline AND both exact-Jaccard
-    # joins; the signatures feed the banded self-join AND both packed-
-    # array joins; and with the cache key, dedup_minhash_lsh /
-    # dedup_cluster_cc in the same session reuse this exact build
-    # instead of paying the shingle pipeline again (VERDICT r7 #6).
-    shingled, sigs, banded = D.minhash_index(
-        d, cache_key=("documents", sf_dir)
-    )
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), "band")
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-    )
+    # shingle sets feed both exact-Jaccard joins, the signatures both
+    # packed-array joins, and the candidates are the very pairs
+    # dedup_minhash_lsh verifies; with the cache key, dedup_minhash_lsh
+    # and the dedup_cluster_* queries in the same session reuse this
+    # exact build instead of paying the shingle pipeline again
+    # (VERDICT r7 #6).
+    shingled, sigs, cand = D.minhash_index(d, cache_key=("documents", sf_dir))
     # One narrow per-doc side: (id, packed signature array, shingle set).
     doc = sigs.select(
         "id", F.array(*[F.col(f"m{p}") for p in range(D.N_PERM)]).alias("sig")
@@ -4537,8 +4531,10 @@ def text_bpe_train(spark, sf_dir):
     shuffle, its 1-row argmax (total tie order: count desc, then
     (a, b)) collected to the driver, and a merge map-pass with that
     pair as literals. A round is two Spark jobs; only the dict is
-    checkpointed. The learned table comes back as a driver-local
-    relation, so the query's own collect launches no further job.
+    checkpointed, and lazily, so round 0's pair-count job writes it
+    (the dict's own word-count shuffle is the one job beyond the
+    rounds). The learned table comes back as a driver-local relation,
+    so the query's own collect launches no further job.
     The apply half is `text_bpe_tokenize`; together they are
     the full tokenizer lifecycle. Oracle replays training positionally
     (unrolled MATERIALIZED CTEs, weighted argmax + gaps-and-islands

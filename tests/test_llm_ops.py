@@ -995,18 +995,18 @@ def test_bpe_training_matches_sennrich_loop(spark, sf_dir):
 
 
 def test_bpe_training_job_count(spark, sf_dir, count_jobs):
-    """Job-count pin: on the fixture dict, training launches one job to
-    checkpoint the dict (a parallelized local list, so no shuffle) and
-    exactly two per learned merge — the pair-count shuffle-map job and
-    the argmax collect. The learned table is driver-local, so reading
-    it launches none."""
+    """Job-count pin: on the fixture dict (a parallelized local list,
+    so no shuffle) training launches exactly two jobs per learned merge
+    — the pair-count shuffle-map job and the argmax collect — and none
+    to checkpoint the dict, which round 0's map job writes. The learned
+    table is driver-local, so reading it launches none."""
     from jubilant_garbanzo_spark.operators import bpe as BPE
 
     wdf = _word_dict(spark, _corpus_vocab(spark, sf_dir))
     df, train_jobs = count_jobs(lambda: BPE.train_merges(wdf))
     rows, read_jobs = count_jobs(df.collect)
     assert len(rows) == BPE.N_TRAIN_MERGES
-    assert train_jobs == 1 + 2 * len(rows), train_jobs
+    assert train_jobs == 2 * len(rows), train_jobs
     assert read_jobs == 0, read_jobs
 
 

@@ -99,9 +99,40 @@ def test_tpch_joins_have_no_cartesian(spark, sf_dir, name):
 
 def test_minhash_signature_aggregates_partially(spark, sf_dir):
     """The MinHash signature groupBy must combine map-side — the shuffle
-    carries 32 longs per doc, never shingle arrays."""
-    df = q(spark, sf_dir, "dedup_minhash_lsh")
-    assert has_partial_aggregate(df)
+    carries 32 longs per doc, never shingle rows: a partial ``min`` of
+    every permutation below the id exchange, the final ``min`` above
+    it. Checked on the signature plan itself; in dedup_minhash_lsh the
+    signatures arrive as a checkpoint scan."""
+    from pyspark.sql import functions as F
+
+    from jubilant_garbanzo_spark.catalog import load_table
+    from jubilant_garbanzo_spark.operators import dedup as D
+
+    docs = load_table(spark, sf_dir, "documents")
+    sh = docs.select(
+        F.col("doc_id").alias("id"), D.shingles(F.col("text")).alias("sh")
+    )
+    nodes = _executed_nodes(D.minhash_signatures(sh))
+
+    def aggregates(node):
+        exprs = node.aggregateExpressions()
+        return sorted(
+            (e.mode().toString(), e.aggregateFunction().prettyName())
+            for e in (exprs.apply(i) for i in range(exprs.size()))
+        )
+
+    aggs = {
+        i: aggregates(n)
+        for i, n in enumerate(nodes)
+        if n.getClass().getSimpleName() == "HashAggregateExec"
+    }
+    final = [i for i, a in aggs.items() if a == [("Final", "min")] * D.N_PERM]
+    partial = [i for i, a in aggs.items() if a == [("Partial", "min")] * D.N_PERM]
+    assert len(final) == 1 and len(partial) == 1, aggs
+    between = [_header(n) for n in nodes[final[0] + 1 : partial[0]]]
+    exchanges = [h for h in between if h.startswith("Exchange")]
+    assert len(exchanges) == 1, between
+    assert exchanges[0].startswith("Exchange hashpartitioning(id#"), exchanges
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
@@ -153,15 +184,17 @@ def test_partitioned_read_prunes_partitions(spark, sf_dir):
     assert m and "event_type" in m.group(1), plan
 
 
-def test_ivf_probe_plan_reads_cached_index(spark, sf_dir):
-    """After build_ivf_index, a probe must read the MATERIALIZED index:
-    both the corpus-assignment and centroid inputs arrive via
-    InMemoryTableScan, and at runtime the cache is actually hit
-    (TableCacheQueryStage in the executed plan) — i.e. the centroid
-    build job runs once at build time, never per probe. (The cached
-    relation's printed recipe still shows its definition, so asserting
-    the absence of build-operator NAMES in plan text would be vacuous.)
-    """
+def test_ivf_probe_plan_reads_cached_index(spark, sf_dir, count_jobs):
+    """build_ivf_index only persists: it launches no job. The first
+    probe reads both index frames through the cache (InMemoryTableScan,
+    TableCacheQueryStage at runtime) and leaves each with its OWN cache
+    entry, every partition stored; a rebuild over the same embeddings
+    plan launches no job and returns frames backed by the same cached
+    buffers. (The cached relation's printed recipe still shows its
+    definition, so asserting the absence of build-operator NAMES in
+    plan text would be vacuous.)"""
+    import pyspark.sql.functions as F
+
     from jubilant_garbanzo_spark.catalog import load_table
     from jubilant_garbanzo_spark.operators.similarity import (
         build_ivf_index,
@@ -169,32 +202,23 @@ def test_ivf_probe_plan_reads_cached_index(spark, sf_dir):
     )
     from jubilant_garbanzo_spark.plans.inspect import formatted_plan
 
-    e = load_table(spark, sf_dir, "embeddings")
-    assigned, centroids = build_ivf_index(e)
-    try:
-        # ADVICE r15: the build must have MATERIALIZED both caches
-        # before any probe runs — the single centroids.count() relies
-        # on Spark's CacheManager substituting the persisted `assigned`
-        # subplan inside the centroid aggregate. If a future Spark
-        # version broke that substitution, the build job would silently
-        # move into the first probe; this asserts that each returned
-        # frame has its OWN cache entry with every partition stored at
-        # build time, not merely HIT at probe time. (Looked up per
-        # frame, so it holds whether or not an earlier test cached the
-        # same plans in this session.)
-        cache = spark._jsparkSession.sharedState().cacheManager()
-        buffers = []
+    # A no-op filter gives this test a plan no other test caches, so the
+    # cache state before the first probe is known.
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= 0)
+    (assigned, centroids), build_jobs = count_jobs(lambda: build_ivf_index(e))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def builders():
+        out = []
         for name, frame in (("assigned", assigned), ("centroids", centroids)):
             entry = cache.lookupCachedData(frame._jdf)
             assert entry.isDefined(), f"{name} has no cache entry"
-            builder = entry.get().cachedRepresentation().cacheBuilder()
-            assert builder.isCachedColumnBuffersLoaded(), (
-                f"build_ivf_index returned before materializing {name}"
-            )
-            buffers.append(builder.cachedColumnBuffers().id())
-        assert buffers[0] != buffers[1], buffers
+            out.append((name, entry.get().cachedRepresentation().cacheBuilder()))
+        return out
 
-        import pyspark.sql.functions as F
+    try:
+        assert build_jobs == 0, build_jobs
+        assert not any(b.isCachedColumnBuffersLoaded() for _, b in builders())
 
         q = e.filter(F.col("vec_id") == 0).select(
             F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -204,7 +228,23 @@ def test_ivf_probe_plan_reads_cached_index(spark, sf_dir):
         assert plan.count("InMemoryTableScan") >= 2, plan
         probe.collect()
         executed = probe._jdf.queryExecution().executedPlan().toString()
-        assert "TableCacheQueryStage" in executed, executed
+        assert executed.count("TableCacheQueryStage") >= 2, executed
+        buffers = []
+        for name, builder in builders():
+            assert builder.isCachedColumnBuffersLoaded(), (
+                f"the first probe left {name} unmaterialized"
+            )
+            buffers.append(builder.cachedColumnBuffers().id())
+        assert buffers[0] != buffers[1], buffers
+
+        (assigned2, centroids2), rebuild_jobs = count_jobs(
+            lambda: build_ivf_index(e)
+        )
+        assert rebuild_jobs == 0, rebuild_jobs
+        for frame, buf in ((assigned2, buffers[0]), (centroids2, buffers[1])):
+            entry = cache.lookupCachedData(frame._jdf)
+            builder = entry.get().cachedRepresentation().cacheBuilder()
+            assert builder.cachedColumnBuffers().id() == buf
     finally:
         assigned.unpersist()
         centroids.unpersist()
@@ -263,8 +303,8 @@ def _broadcast_cross_joins(df):
 
 
 def test_ivf_probe_is_one_batch_plan(spark, sf_dir, count_jobs):
-    """A warm embed_ann_ivf is 5 jobs: 1 to build the index, 4 to
-    collect the probe of both queries. The probe's executed plan has
+    """A warm embed_ann_ivf is 4 jobs: none to build the index (the
+    caches are already filled), 4 to collect the probe of both queries. The probe's executed plan has
     one hash exchange (the per-query top-k), none under the centroid
     ranking (the single-partition centroids need none), and broadcasts
     the query batch once, into the centroid cross join; the only other
@@ -274,7 +314,7 @@ def test_ivf_probe_is_one_batch_plan(spark, sf_dir, count_jobs):
     df, build_jobs = count_jobs(lambda: fn(spark, sf_dir))
     rows, collect_jobs = count_jobs(df.collect)
     assert rows
-    assert (build_jobs, collect_jobs) == (1, 4)
+    assert (build_jobs, collect_jobs) == (0, 4)
 
     nodes = _executed_nodes(df)
     headers = [_header(n) for n in nodes]
@@ -312,6 +352,22 @@ def test_candidate_joins_are_equi_joins(spark, sf_dir):
         assert strategies, name
         assert "CartesianProduct" not in strategies, (name, strategies)
         assert "BroadcastNestedLoopJoin" not in strategies, (name, strategies)
+
+    # dedup_minhash_lsh reads its band candidates from the session's
+    # memoized index, so the band join itself is checked on the
+    # uncached candidate stage: one equi-join, keyed on the band alone.
+    from jubilant_garbanzo_spark.catalog import load_table
+    from jubilant_garbanzo_spark.operators import dedup as D
+
+    _, cand = D.minhash_band_candidates(load_table(spark, sf_dir, "documents"))
+    strategies = join_strategies(cand)
+    assert "CartesianProduct" not in strategies, strategies
+    assert "BroadcastNestedLoopJoin" not in strategies, strategies
+    joins = [n for n in _executed_nodes(cand) if n.getClass().getSimpleName()
+             in ("SortMergeJoinExec", "ShuffledHashJoinExec", "BroadcastHashJoinExec")]
+    assert len(joins) == 1, [_header(n) for n in joins]
+    for keys in (joins[0].leftKeys(), joins[0].rightKeys()):
+        assert [keys.apply(i).name() for i in range(keys.size())] == ["band"]
 
 
 # --- round-4 sampling / quality / k-NN plan gates ---------------------
@@ -947,9 +1003,11 @@ def test_parameterized_sql_pushes_bound_literal(spark, sf_dir):
 
 
 def test_minhash_accuracy_has_no_nested_loop(spark, sf_dir):
-    """Round-7 regression pin: dedup_minhash_accuracy's candidate stage
-    must be the banded hash equi-join. The round-6 body joined on
-    (id_a < id_b) AND (OR of per-band equalities) — Catalyst can only
+    """Round-7 regression pin: dedup_minhash_accuracy must take its
+    candidates from the banded hash equi-join (today the memoized
+    minhash_index pairs, whose band join
+    test_candidate_joins_are_equi_joins checks). The round-6 body joined
+    on (id_a < id_b) AND (OR of per-band equalities) — Catalyst can only
     execute that as a BroadcastNestedLoopJoin over all N² signature
     pairs (the 12.5 s x1 outlier in BENCH_scale). If either shows up
     again, the scale story is gone regardless of row correctness."""
@@ -1049,6 +1107,34 @@ def test_suffix_array_dense_rank_never_windows_the_data(spark, sf_dir):
     assert plan.count("Exchange SinglePartition") <= 1, plan[:2000]
     assert "hashpartitioning(_b" in plan, plan[:2000]
     assert "CartesianProduct" not in plan
+
+
+def test_minhash_candidates_session_cache_shares_one_build(
+    spark, sf_dir, count_jobs
+):
+    """cache_key'd minhash_band_candidates must return the SAME memoized
+    frames on a second call, candidates included, and they are the
+    minhash_index entry's; ad-hoc calls (cache_key=None) must not share
+    them. A warm dedup_minhash_lsh then only verifies the memoized
+    candidates: 4 jobs, no band join or distinct."""
+    from jubilant_garbanzo_spark.catalog import load_table
+    from jubilant_garbanzo_spark.operators import dedup as D
+
+    docs = load_table(spark, sf_dir, "documents")
+    key = ("documents", sf_dir)
+    sh, cand = D.minhash_band_candidates(docs, cache_key=key)
+    sh2, cand2 = D.minhash_band_candidates(docs, cache_key=key)
+    assert sh2 is sh and cand2 is cand
+    index = D.minhash_index(docs, cache_key=key)
+    assert index[0] is sh and index[2] is cand
+    sh3, cand3 = D.minhash_band_candidates(docs)
+    assert sh3 is not sh and cand3 is not cand
+
+    fn = SPECS["dedup_minhash_lsh"].fn
+    fn(spark, sf_dir).collect()  # warm: parquet footer memo, codegen
+    rows, jobs = count_jobs(lambda: fn(spark, sf_dir).collect())
+    assert rows
+    assert jobs == 4, jobs
 
 
 def test_suffix_ranks_session_cache_shares_one_build(spark, sf_dir):
